@@ -51,26 +51,6 @@ trait IncrementalIndex { self: Node =>
     * exactly that when given a `deleteCol`. */
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit
 
-  /** Apply ONE CDC wave: `upserts` REPLACE any stored version of their ids
-    * (delete-then-insert, the upsert composition above), `deletes` are
-    * takedowns applied LAST — an id in BOTH sets nets to the delete (the
-    * MergeNode/CdcApply convention, q164's shape). The default three-call
-    * sequence is exact for every family and is the MEASURED-FAST path:
-    * round 19 overrode it in three families with a combined
-    * tombstone-then-insert wave (one driver action per micro-batch instead
-    * of three) and the contract-config bench measured that 1.9-13.5x
-    * SLOWER (q209 14.98 → 201.97 s) — the combined wave forces BOTH the
-    * delete-step Δview derivation and the insert-step join on every
-    * micro-batch where pure-upsert/pure-delete batches paid one side, and
-    * its anti-join re-evaluates each uncached wave leg 2-3x. Reverted in
-    * r20 (A/B in OPTIMIZATION_r20.md); do not re-add an override without
-    * a committed 32-core win on q198/q204/q205/q209/q211. */
-  def applyCdcWave(ctx: Ctx, upserts: DataFrame, deletes: DataFrame): Unit = {
-    deleteFromIndex(ctx, upserts)
-    updateIndex(ctx, upserts)
-    deleteFromIndex(ctx, deletes)
-  }
-
   /** The family's per-document RETENTION ledger: (frame, id column), where
     * the frame carries the id under the name `deleteFromIndex` consumes
     * plus whatever per-document columns the family keeps (each override
@@ -873,6 +853,25 @@ object IndexMaintenance {
     * `deleteCol = None` every row is a plain append (`updateIndex` only —
     * no per-batch delete pass, the pre-CDC behavior).
     *
+    * A CDC micro-batch is persisted once and sized by ONE driver action
+    * (upsert and tombstone row counts); only the legs with rows run. Each
+    * leg is a full index wave (a chained join → join → GROUP BY wave is
+    * ~30 Spark jobs) whatever its input size, so running all three legs
+    * on every batch made pure batches pay for their empty legs: in a
+    * traced chained-view run the trailing delete over an empty tombstone
+    * set took ~27% of a fact-upsert wave's stream time, and the two empty
+    * upsert legs ~46% of a fact-delete wave's.
+    *
+    * Measured negative result (keep the legs separate): round 19 fused
+    * the three legs into one combined tombstone-then-insert wave per
+    * family (one driver action per micro-batch instead of three) and the
+    * contract-config bench measured it 1.9-13.5x SLOWER (q209
+    * 14.98 → 201.97 s) — the combined wave forces BOTH the delete-step
+    * Δview derivation and the insert-step join on every micro-batch, and
+    * its anti-join re-evaluates each uncached wave leg 2-3x. Reverted in
+    * r20 (A/B in OPTIMIZATION_r20.md); do not fuse the legs without a
+    * committed 32-core win on q198/q204/q205/q209/q211.
+    *
     * Pass a `checkpoint` for any maintenance that may re-drain the same
     * source (restarts, periodic AvailableNow re-runs over a growing
     * directory): the checkpoint makes batch ids a stable property of the
@@ -931,7 +930,7 @@ object IndexMaintenance {
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         if (batchId > idx.lastAppliedBatch) {
           import org.apache.spark.sql.functions.{assert_true, col, coalesce,
-            concat_ws, lag, lit, row_number}
+            concat_ws, count_if, lag, lit, row_number}
           // net-resolve a multi-overlay batch to each key's latest version
           // (wave order), then drop the wave stamp either way
           val batch = (netResolveKeys, waveCol) match {
@@ -944,15 +943,19 @@ object IndexMaintenance {
               // would otherwise pick a nondeterministic survivor SILENTLY.
               // Same window spec as the resolution itself (no extra
               // exchange): in wc-desc order, two rows of one (key, wave)
-              // are adjacent, so lag(wc) == wc flags a duplicate in ANY
+              // are adjacent, so lag(wc) <=> wc flags a duplicate in ANY
               // wave, not just the key's latest (ADVICE r19 #1 closed).
+              // A null stamp has no wave order, so it fails too; the
+              // compare is null-safe because `===` yields null there,
+              // which the assert would read as "no duplicate".
               batch0.withColumn("__mor_rn", row_number().over(w))
-                .withColumn("__mor_dup", lag(col(wc), 1).over(w) === col(wc))
+                .withColumn("__mor_dup", lag(col(wc), 1).over(w) <=> col(wc))
                 .filter(assert_true(
-                  !coalesce(col("__mor_dup"), lit(false)),
-                  concat_ws("", lit("maintainFromStream: duplicate key " +
-                    "within one wave violates the net-resolution contract " +
-                    "(keys must be unique per overlay) — offending key: "),
+                  col(wc).isNotNull && !col("__mor_dup"),
+                  concat_ws("", lit("maintainFromStream: null wave stamp or " +
+                    "duplicate key within one wave violates the " +
+                    "net-resolution contract (keys must be unique per " +
+                    "overlay) — offending key: "),
                     concat_ws(",", ks.map(k => col(k).cast("string")): _*),
                     lit(" wave: "), col(wc).cast("string"))).isNull)
                 .filter(col("__mor_rn") === 1).drop("__mor_rn", "__mor_dup", wc)
@@ -963,13 +966,22 @@ object IndexMaintenance {
             case None => idx.updateIndex(ctx, batch)
             case Some(c) =>
               val flag = coalesce(col(c).cast("boolean"), lit(false))
-              val upserts = batch.filter(!flag).drop(c)
-              val deletes = batch.filter(flag).drop(c)
-              // upsert = replace (drop any superseded version, then
-              // append), tombstones last — as ONE index wave where the
-              // family supports it (applyCdcWave doc), the three-call
-              // sequence otherwise
-              idx.applyCdcWave(ctx, upserts, deletes)
+              // persisted once: the count below and every leg read the
+              // same rows, and net-resolution (with its duplicate assert)
+              // is evaluated once, not once per leg
+              batch.persist()
+              try {
+                val n = batch.agg(count_if(!flag), count_if(flag)).head()
+                // upsert = replace (drop any superseded version, then
+                // append), tombstones last; an empty leg is skipped
+                if (n.getLong(0) > 0) {
+                  val upserts = batch.filter(!flag).drop(c)
+                  idx.deleteFromIndex(ctx, upserts)
+                  idx.updateIndex(ctx, upserts)
+                }
+                if (n.getLong(1) > 0)
+                  idx.deleteFromIndex(ctx, batch.filter(flag).drop(c))
+              } finally batch.unpersist(blocking = true)
           }
           idx.lastAppliedBatch = batchId
         }

@@ -5255,6 +5255,97 @@ class NodesSpec extends AnyFunSuite {
     assert(err.getMessage.contains("waveCol"))
   }
 
+  /** Records each maintenance call as (micro-batch id, op, sorted doc ids)
+    * and forwards it to `inner` when one is given. */
+  private class RecordingIndex(inner: Option[InvertedIndexNode])
+      extends FnNode(Nil, Seq(Port("result")), (_, _) => Map.empty, "recording")
+      with IncrementalIndex {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Seq[Long])]
+    private def record(op: String, df: DataFrame): Unit =
+      calls += ((lastAppliedBatch + 1, op,
+        df.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted))
+    def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
+      record("update", delta); inner.foreach(_.updateIndex(ctx, delta))
+    }
+    def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
+      record("delete", deletes); inner.foreach(_.deleteFromIndex(ctx, deletes))
+    }
+  }
+
+  test("maintainFromStream net-resolution: a duplicate key within one wave " +
+       "fails loudly, also when the wave stamp is null") {
+    val c = Ctx(spark)
+    val stage = java.nio.file.Files.createTempDirectory("graft_dupwave_spec").toString
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
+    def drill(tag: String, wave: Option[Long]): Unit = {
+      val rows = Seq((1L, "a", false, wave), (1L, "b", false, wave),
+        (2L, "c", false, Some(1L))).toDF("doc_id", "text", "is_delete", "wave")
+      rows.coalesce(1).write.parquet(s"$stage/$tag")
+      val rec = new RecordingIndex(None)
+      val err = intercept[Exception] {
+        IndexMaintenance.maintainFromStream(rec, c,
+          spark.readStream.schema(rows.schema).parquet(s"$stage/$tag"),
+          checkpoint = Some(s"$stage/${tag}_ckpt"), deleteCol = Some("is_delete"),
+          netResolveKeys = Seq("doc_id"), waveCol = Some("wave"))
+      }
+      assert(msgs(err).exists(m => m != null && m.contains("net-resolution contract")),
+        s"$tag: ${msgs(err)}")
+      assert(rec.calls.isEmpty && rec.lastAppliedBatch == -1L,
+        s"$tag: a rejected batch must apply nothing")
+    }
+    drill("stamped", Some(5L))
+    // `lag(wave) === wave` is null for null stamps and read as "no
+    // duplicate" — a silent nondeterministic survivor
+    drill("null_stamp", None)
+  }
+
+  test("maintainFromStream CDC mode runs only the legs with rows: pure " +
+       "upsert 2 calls, pure delete 1, mixed 3 (delete wins), empty 0") {
+    import spark.implicits._
+    val c = Ctx(spark)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_cdc_legs_spec").toString + "/pub"
+    val base = (0L until 10L).map(i => (i, s"alpha beta w$i")).toDF("doc_id", "text")
+    AtomicPublish.publish(spark, root, t => base.coalesce(1).write.parquet(t))
+    val inv = new InvertedIndexNode(k = 5, maxDfFrac = 1.0)
+    inv.fit(c, In.single("corpus" -> base))
+    val rec = new RecordingIndex(Some(inv))
+    val overlays = Seq(
+      Seq((3L, "gamma delta replaced", false), (20L, "alpha gamma fresh", false)),
+      Seq((5L, null: String, true)),
+      Seq((7L, "alpha zeta", false), (21L, "beta eta", false), (7L, null: String, true)),
+      Seq.empty[(Long, String, Boolean)])
+    // one overlay per call: each AvailableNow drain is exactly one batch
+    overlays.zipWithIndex.foreach { case (rows, i) =>
+      AtomicPublish.publishDelta(spark, root, i + 1L, t =>
+        rows.toDF("doc_id", "text", MorCdc.DeletedCol).coalesce(1).write.parquet(t))
+      IndexMaintenance.maintainFromStream(rec, c,
+        new MorTailNode(root).transform(c, In.empty)("result"),
+        checkpoint = Some(root + "_ckpt"), deleteCol = Some(MorCdc.DeletedCol))
+    }
+    assert(rec.calls.toSeq == Seq(
+      (0L, "delete", Seq(3L, 20L)), (0L, "update", Seq(3L, 20L)),
+      (1L, "delete", Seq(5L)),
+      (2L, "delete", Seq(7L, 21L)), (2L, "update", Seq(7L, 21L)),
+      (2L, "delete", Seq(7L))))
+    assert(rec.lastAppliedBatch == 3L, "the all-empty batch must still advance the guard")
+    // the forwarded index equals a from-scratch fit over the post-CDC corpus
+    val scratch = new InvertedIndexNode(k = 5, maxDfFrac = 1.0)
+    scratch.fit(c, In.single("corpus" -> base.filter("doc_id not in (3, 5, 7)")
+      .union(Seq((3L, "gamma delta replaced"), (20L, "alpha gamma fresh"),
+        (21L, "beta eta")).toDF("doc_id", "text"))))
+    val queries = Seq((100L, "alpha gamma"), (101L, "beta zeta"))
+      .toDF("query_id", "text")
+    def res(n: InvertedIndexNode): Set[(Long, Long, Long, Int)] =
+      n.transform(c, In.single("queries" -> queries))("result")
+        .select("query_id", "doc_id", "score", "rank")
+        .as[(Long, Long, Long, Int)].collect().toSet
+    assert(res(inv) == res(scratch))
+    assert(inv.model.get.nDocs == scratch.model.get.nDocs)
+    inv.unpersistIndex(); scratch.unpersistIndex()
+  }
+
   test("maintainFromStream CDC mode: upserts replace, tombstones delete; " +
        "checkpoint-less re-maintenance refused after applied batches") {
     import spark.implicits._
